@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_cnpjs_spark.memo import SessionMemo
+
 # Driver-provided synthetic star schema (TESTDATA.md).
 TESTDATA_TABLES = (
     "region",
@@ -65,8 +67,8 @@ def table_path(sf_dir: str, name: str) -> str:
 #     off and the win is taken only where the compute justifies it.
 # (b) It fires only when the table's splittable units (row groups summed
 #     across files) cannot feed the session's default parallelism AND the
-#     table is big enough for a shuffle to pay for itself (env-tunable
-#     floor, default 512 KiB). At cluster scale, real tables have many
+#     table is big enough for a shuffle to pay for itself (the
+#     512 KiB floor below). At cluster scale, real tables have many
 #     files × many row groups, the gate is false, and plans are
 #     byte-identical to the ungated form — input-derived partitioning,
 #     not a local[32] tune.
@@ -76,15 +78,12 @@ def table_path(sf_dir: str, name: str) -> str:
 # of cross-core-count driver runs already exercise; every opted-in key is
 # additionally re-proven against its DuckDB oracle this round.
 
-_SCAN_UNITS_CACHE: dict[str, tuple[int, int]] = {}
+_SCAN_PARALLELIZE_MIN_BYTES = 512 * 1024
 
 
 def _scan_units(path: str) -> tuple[int, int]:
     """(splittable row groups, total bytes) for a parquet file or dir of
-    files — one footer read per path per process, memoized."""
-    cached = _SCAN_UNITS_CACHE.get(path)
-    if cached is not None:
-        return cached
+    files, from the footers."""
     try:
         import pyarrow.parquet as pq
 
@@ -101,22 +100,18 @@ def _scan_units(path: str) -> tuple[int, int]:
         nbytes = sum(os.path.getsize(f) for f in files)
     except Exception:  # unreadable/foreign layout: never block the read
         groups, nbytes = 1 << 30, 0  # gate stays closed
-    _SCAN_UNITS_CACHE[path] = (groups, nbytes)
     return (groups, nbytes)
 
 
-def _scan_parallelize_min_bytes() -> int:
-    return int(os.environ.get("SPARK_GRAFT_SCAN_PARALLELIZE_MIN_BYTES", str(512 * 1024)))
+_SCAN_UNITS_CACHE = SessionMemo()
 
 
 def maybe_parallelize_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     """Round-robin repartition to session parallelism iff the parquet
     layout cannot (row groups < parallelism) and the bytes floor passes."""
-    if os.environ.get("SPARK_GRAFT_SCAN_PARALLELIZE", "1") == "0":
-        return df
     n = spark.sparkContext.defaultParallelism
-    groups, nbytes = _scan_units(path)
-    if groups < n and nbytes >= _scan_parallelize_min_bytes():
+    groups, nbytes = _SCAN_UNITS_CACHE.get(spark, path, lambda: _scan_units(path))
+    if groups < n and nbytes >= _SCAN_PARALLELIZE_MIN_BYTES:
         return df.repartition(n)
     return df
 
@@ -125,9 +120,9 @@ def maybe_parallelize_scan(spark: SparkSession, df: DataFrame, path: str) -> Dat
 #
 # Every table() call used to re-run parquet footer SCHEMA INFERENCE
 # (plus the dtypes round trip that decides the timestamp normalization)
-# — measured at ~0.09 s per call on this box
-# (tools/profile_overhead_r14.py: 'construct' is ~1/3 of a tail key's
-# wall time at sf0.1; multi-table keys pay 0.25-0.43 s; ~390 keys × 1-3
+# — measured at ~0.09 s per call (OPTIMIZATION_r14.md,
+# "per-key fixed overhead": 'construct' is ~1/3 of a tail key's wall
+# time at sf0.1; multi-table keys pay 0.25-0.43 s; ~390 keys × 1-3
 # calls ≈ tens of seconds of the bench's query total). A production
 # engine declares its table schemas ONCE per session in a catalog;
 # re-inferring per query is an artifact of path-based reads. This memo
@@ -140,23 +135,24 @@ def maybe_parallelize_scan(spark: SparkSession, df: DataFrame, path: str) -> Dat
 #
 # What this is NOT: a data cache. Nothing is materialized — every
 # execution re-lists and re-scans the parquet input at action time
-# exactly as before; only the footer schema (a write-time constant of
-# the fixture) is reused.
-#
-# Keyed by applicationId (the _shingle_cache discipline) so a
-# stopped-and-recreated session never aliases a dead entry. A caller
-# that rewrites a fixture path in-process WITH A DIFFERENT SCHEMA uses
-# clear_table_memo() (no current caller does — test fixture dirs are
-# write-once) or SPARK_GRAFT_TABLE_MEMO=0.
+# exactly as before; only the footer schema is reused, and a table
+# rewritten at the same path is re-inferred (memo.SessionMemo
+# fingerprints the path on every call).
 
-_TABLE_META_CACHE: dict[tuple[str, str], tuple[object, tuple[tuple[str, str], ...]]] = {}
+_TABLE_META_CACHE = SessionMemo()
 
 
-def clear_table_memo() -> int:
-    """Drop every memoized table schema; returns how many were dropped."""
-    n = len(_TABLE_META_CACHE)
-    _TABLE_META_CACHE.clear()
-    return n
+def _table_meta(spark: SparkSession, path: str, name: str) -> tuple[object, tuple[tuple[str, str], ...]]:
+    """(inferred schema, timestamp fixes) of one table's parquet."""
+    df = spark.read.parquet(path)
+    dtypes = df.dtypes
+    fixes = []
+    if name == "events" and dict(dtypes).get("ts") == "bigint":
+        fixes.append(("ts", "nanos_as_long"))
+    for col, dtype in dtypes:
+        if dtype == "timestamp_ntz":
+            fixes.append((col, "ntz_cast"))
+    return df.schema, tuple(fixes)
 
 
 def table(
@@ -183,25 +179,10 @@ def table(
     exactly one place and the rest of the engine sees one timestamp type.
     """
     path = table_path(sf_dir, name)
-    memo_on = os.environ.get("SPARK_GRAFT_TABLE_MEMO", "1") != "0"
-    key = (spark.sparkContext.applicationId, path)
-    meta = _TABLE_META_CACHE.get(key) if memo_on else None
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if meta is None:
-        df = spark.read.parquet(path)
-        fixes = []
-        dtypes = df.dtypes
-        if name == "events" and dict(dtypes).get("ts") == "bigint":
-            fixes.append(("ts", "nanos_as_long"))
-        for col, dtype in dtypes:
-            if dtype == "timestamp_ntz":
-                fixes.append((col, "ntz_cast"))
-        if memo_on:
-            _TABLE_META_CACHE[key] = (df.schema, tuple(fixes))
-    else:
-        schema, fixes = meta
-        df = spark.read.schema(schema).parquet(path)
+    schema, fixes = _TABLE_META_CACHE.get(spark, path, lambda: _table_meta(spark, path, name))
+    df = spark.read.schema(schema).parquet(path)
     for col, kind in fixes:
         if kind == "nanos_as_long":
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))

@@ -22,12 +22,17 @@ _BOM = b"\xef\xbb\xbf"
 
 
 def export_csv(df: DataFrame, out_dir: str, sep: str = ";") -> str:
-    """Distributed ';' CSV write with header; parts committed atomically."""
+    """Distributed ';' CSV write with header; parts committed atomically.
+    Fields are written verbatim: Spark's CSV writer trims leading and
+    trailing whitespace by default, which would strip the right-padded
+    ``nome_municipio`` the reference exports as-is."""
     (
         df.write.mode("overwrite")
         .option("sep", sep)
         .option("header", "true")
         .option("encoding", "UTF-8")
+        .option("ignoreLeadingWhiteSpace", "false")
+        .option("ignoreTrailingWhiteSpace", "false")
         .csv(out_dir)
     )
     return out_dir

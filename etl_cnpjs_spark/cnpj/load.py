@@ -50,7 +50,9 @@ def load_raw_parquet(spark: SparkSession, routed: dict[str, list[str]], out_dir:
     read+write no longer serializes behind six small dimension loads —
     its tail tasks back-fill with the next table's scan. 3 in flight is
     the guide's "enough to fill the tail" sizing; results and
-    idempotence are unchanged (each job touches only its own dest)."""
+    idempotence are unchanged (each job touches only its own dest). All
+    tables finish before a failure is raised, naming each failed table
+    and its first shard; the tables that loaded stay committed."""
     from concurrent.futures import ThreadPoolExecutor
 
     todo = [
@@ -59,18 +61,22 @@ def load_raw_parquet(spark: SparkSession, routed: dict[str, list[str]], out_dir:
         if paths and table in TABLE_COLUMNS
     ]
 
-    def load_one(item: tuple[str, list[str]]) -> tuple[str, str]:
-        table, paths = item
+    def load_one(table: str, paths: list[str]) -> str:
         dest = os.path.join(out_dir, f"{table}.parquet")
         df = read_raw(spark, paths, table)
         writer = df.write.mode("overwrite")
         if table == "estabelecimentos" and partition_estab_by_uf:
             writer = writer.partitionBy("uf")
         writer.parquet(dest)
-        return table, dest
+        return dest
 
     with ThreadPoolExecutor(max_workers=3) as pool:
-        return dict(pool.map(load_one, todo))
+        futures = {table: pool.submit(load_one, table, paths) for table, paths in todo}
+    failed = [t for t, f in futures.items() if f.exception() is not None]
+    if failed:
+        names = ", ".join(f"{t} (first shard {routed[t][0]})" for t in failed)
+        raise RuntimeError(f"raw load failed for {names}") from futures[failed[0]].exception()
+    return {t: f.result() for t, f in futures.items()}
 
 
 def register_raw(spark: SparkSession, table_paths: dict[str, str]) -> None:

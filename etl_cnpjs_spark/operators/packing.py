@@ -1,7 +1,7 @@
 """Greedy document-preserving sequence packing — the ONE definition of
 the fold every packing surface shares (doc_pack_greedy,
-doc_pack_greedy_sharded, corpus_build's packing stage, and
-tools/stress_r8.py's stress shape). The recurrence is the registered
+doc_pack_greedy_sharded, corpus_build's packing stage, and the
+round-8 stress shape recorded in SCALE.md). The recurrence is the registered
 contract replayed by the DuckDB recursive-CTE oracles: close the
 current bin when the next doc would overflow `budget` (never split a
 doc; an oversize doc gets its own bin); per-group state is two ints.

@@ -21,10 +21,9 @@ the driver, and additionally by tests/test_cnpj_parity.py.
 
 from __future__ import annotations
 
-import atexit
+import json
 import os
 import re
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +38,7 @@ from etl_cnpjs_spark.cnpj.flagship import (
 from etl_cnpjs_spark.cnpj.ingest import discover
 from etl_cnpjs_spark.cnpj.load import load_raw_parquet, register_raw
 from etl_cnpjs_spark.cnpj.schemas import AFFINITY_KEYS, DIM_COLUMNS, TABLE_COLUMNS
+from etl_cnpjs_spark.memo import session_tmpdir, stage_once
 from etl_cnpjs_spark.plans.registry import register
 
 # Fixture volume tracks the requested SF so the bench measures the
@@ -67,19 +67,13 @@ def _feed_dir(sizes: tuple[int, int]) -> str:
     return os.path.join(_ORACLE_FEED_ROOT, f"{sizes[0]}x{sizes[1]}")
 
 
-# Generated fixture SOURCE (the CSV/zip drop), memoized per size and
-# process — and, since r14, staged IDEMPOTENTLY ACROSS PROCESSES at a
-# deterministic size-keyed path with a _DONE manifest, exactly the
-# stage_oracle_feed discipline below: the generator is deterministic
-# (seed 42, byte-identical shards every run) and produces INPUT data,
-# so re-running it per process was ~6.5 s of the sf0.1 staging budget
-# spent recreating bytes that already exist. The marker carries a
-# digest of the generator source, so editing fixtures.py invalidates
-# the staged drop; generation lands in a unique temp dir and is
-# atomically renamed into place (a concurrent loser just rereads the
-# winner's identical bytes).
-_fixture_src_cache: dict[tuple[int, int], tuple[str, dict]] = {}
-
+# Generated fixture SOURCE (the CSV/zip drop), staged across processes
+# at a deterministic size-keyed path (memo.stage_once): the generator is
+# deterministic (seed 42, byte-identical shards every run) and produces
+# INPUT data, so re-running it per process was ~6.5 s of the sf0.1
+# staging budget spent recreating bytes that already exist. The stage
+# name carries a digest of the generator source, so editing fixtures.py
+# invalidates the staged drop.
 _FIXTURE_SRC_ROOT = os.path.join(tempfile.gettempdir(), "cnpj_fixture_src")
 
 
@@ -91,90 +85,48 @@ def _generator_digest() -> str:
 
 
 def _generated_fixtures(sizes: tuple[int, int]) -> tuple[str, dict]:
-    hit = _fixture_src_cache.get(sizes)
-    if hit is not None:
-        return hit
-    import json
+    """(stage dir, {table: [shard paths]}) of the staged fixture drop."""
 
-    src = os.path.join(
-        _FIXTURE_SRC_ROOT, f"{sizes[0]}x{sizes[1]}-{_generator_digest()}"
-    )
-    manifest = os.path.join(src, "_DONE")
-    try:
-        with open(manifest) as f:
-            rel = json.load(f)
-        paths = {
-            t: [os.path.join(src, p) for p in ps] for t, ps in rel.items()
-        }
-        _fixture_src_cache[sizes] = (src, paths)
-        return src, paths
-    except (OSError, ValueError):
-        pass
-    work = tempfile.mkdtemp(prefix="cnpj_fixtures_")
-    paths = fixtures.generate(
-        work, seed=42, n_empresas=sizes[0], n_estab=sizes[1]
-    )
-    rel = {
-        t: [os.path.relpath(p, work) for p in ps] for t, ps in paths.items()
-    }
-    os.makedirs(_FIXTURE_SRC_ROOT, exist_ok=True)
-    tmp_manifest = os.path.join(work, f"._DONE.tmp{os.getpid()}")
-    with open(tmp_manifest, "w") as f:
-        json.dump(rel, f)
-    os.replace(tmp_manifest, os.path.join(work, "_DONE"))
-    try:
-        os.rename(work, src)  # atomic publish; loser keeps the winner's
-    except OSError:
-        if os.path.exists(os.path.join(src, "_DONE")):
-            shutil.rmtree(work, ignore_errors=True)  # someone else won
-        else:  # rename failed for another reason: serve this process
-            atexit.register(shutil.rmtree, work, ignore_errors=True)
-            src = work
-    paths = {t: [os.path.join(src, p) for p in ps] for t, ps in rel.items()}
-    _fixture_src_cache[sizes] = (src, paths)
-    return src, paths
+    def build(work: str) -> None:
+        paths = fixtures.generate(work, seed=42, n_empresas=sizes[0], n_estab=sizes[1])
+        rel = {t: [os.path.relpath(p, work) for p in ps] for t, ps in paths.items()}
+        with open(os.path.join(work, "tables.json"), "w") as f:
+            json.dump(rel, f)
+
+    src = stage_once(_FIXTURE_SRC_ROOT, f"{sizes[0]}x{sizes[1]}-{_generator_digest()}", build)
+    with open(os.path.join(src, "tables.json")) as f:
+        rel = json.load(f)
+    return src, {t: [os.path.join(src, p) for p in ps] for t, ps in rel.items()}
 
 
 def stage_oracle_feed(sizes: tuple[int, int] | None = None) -> str:
     """Publish the DuckDB oracle feed: deterministic fixture shards
     (seed 42) ingested exactly as the reference ingests them — pandas
     dtype=str over latin-1 ';' headerless CSV (etl.py:87) — one parquet
-    per QUERY_FINAL table at a deterministic size-keyed path. Idempotent
-    per size (marker file); per-file os.replace keeps readers consistent.
-    Only the fixture generator is shared with the Spark path: the bytes
-    under comparison are produced by two independent ingestion stacks."""
+    per QUERY_FINAL table at a deterministic size-keyed path, staged
+    once across processes (memo.stage_once). Only the fixture generator
+    is shared with the Spark path: the bytes under comparison are
+    produced by two independent ingestion stacks."""
     sizes = sizes or _SIZES["0.01"]
-    feed = _feed_dir(sizes)
-    marker = os.path.join(feed, "_DONE")
-    try:
-        with open(marker) as f:
-            if f.read() == "done":
-                return feed
-    except OSError:
-        pass
-    import pandas as pd
 
-    os.makedirs(feed, exist_ok=True)
-    _, paths = _generated_fixtures(sizes)
-    for t in AFFINITY_KEYS:  # exactly the QUERY_FINAL-facing tables
-        pdf = pd.concat(
-            [
-                pd.read_csv(
-                    p, sep=";", header=None, dtype=str,
-                    encoding="latin1", names=TABLE_COLUMNS[t],
-                )
-                for p in paths[t]
-            ],
-            ignore_index=True,
-        )
-        tmp = os.path.join(feed, f".{t}.tmp{os.getpid()}.parquet")
-        pdf.to_parquet(tmp, index=False)
-        os.replace(tmp, os.path.join(feed, f"{t}.parquet"))
-    tmp = f"{marker}.tmp{os.getpid()}"
-    with open(tmp, "w") as f:
-        f.write("done")
-    os.replace(tmp, marker)
-    return feed
+    def build(feed: str) -> None:
+        import pandas as pd
+
+        _, paths = _generated_fixtures(sizes)
+        for t in AFFINITY_KEYS:  # exactly the QUERY_FINAL-facing tables
+            pdf = pd.concat(
+                [
+                    pd.read_csv(
+                        p, sep=";", header=None, dtype=str,
+                        encoding="latin1", names=TABLE_COLUMNS[t],
+                    )
+                    for p in paths[t]
+                ],
+                ignore_index=True,
+            )
+            pdf.to_parquet(os.path.join(feed, f"{t}.parquet"), index=False)
+
+    return stage_once(_ORACLE_FEED_ROOT, os.path.basename(_feed_dir(sizes)), build)
 
 
 def _oracle_sql() -> str:
@@ -202,8 +154,7 @@ def ensure_cnpj_env(spark: SparkSession, sf_dir: str) -> None:
     if _env_cache.get(spark.sparkContext.applicationId) == sizes:
         return
     src, paths = _generated_fixtures(sizes)
-    base = tempfile.mkdtemp(prefix="cnpj_plan_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)  # scratch, not output
+    base = session_tmpdir("cnpj_plan_")  # scratch, not output
     routed = discover(os.path.join(src, "zips"))
     table_paths = load_raw_parquet(spark, routed, os.path.join(base, "raw"))
     dim_routed = {t: paths[t] for t in DIM_COLUMNS}

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from etl_cnpjs_spark.catalog import table
 from etl_cnpjs_spark.functions.text import shingles, tokens
+from etl_cnpjs_spark.memo import session_memo
 from etl_cnpjs_spark.operators.graph import connected_components
 from etl_cnpjs_spark.operators.dedup import (
     candidate_pairs,
@@ -93,9 +94,7 @@ _SQL_EXACT_JACCARD = (
 )
 
 
-_shingle_cache: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh) with non-empty distinct 3-gram shingles, materialized
     via localCheckpoint: every dedup plan references this frame from 2-4
@@ -104,43 +103,24 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen/CSE). Memoized per (session, sf_dir) because four plans
     (ngram/minhash/cluster/canonical) start from the same frame — one
     shingle job per session instead of four. At cluster scale the same
-    role is played by persist(DISK_ONLY) or a staged parquet write.
-
-    Keyed by applicationId (not id(spark)) so a stopped-and-recreated
-    session can't alias a dead entry's id; localCheckpoint blocks die
-    with their application, and the key dies with them. Bench/driver
-    runs are one application — the cache stays one entry per sf."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _shingle_cache.get(key)
-    if cached is not None:
-        return cached
+    role is played by persist(DISK_ONLY) or a staged parquet write."""
     d = table(spark, sf_dir, "documents", parallel=True)
-    out = (
+    return (
         d.select("doc_id", shingles(tokens(F.col("text"))).alias("sh"))
         .filter(F.size("sh") > 0)
         .localCheckpoint()
     )
-    _shingle_cache[key] = out
-    return out
 
 
-_pairs_cache: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo
 def _exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized exact-Jaccard pairs (same discipline and applicationId
-    keying as _doc_shingles): five consumers (ngram plan, cluster/
-    canonical edges, corpus_curate's near-dup drop,
-    sql_recursive_closure's edge list) otherwise re-run the posting
-    self-join each."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _pairs_cache.get(key)
-    if cached is None:
-        cached = jaccard_pairs(
-            _doc_shingles(spark, sf_dir), "doc_id", "sh", JACCARD_THRESHOLD
-        ).localCheckpoint()
-        _pairs_cache[key] = cached
-    return cached
+    """Memoized exact-Jaccard pairs (same discipline as _doc_shingles):
+    five consumers (ngram plan, cluster/canonical edges, corpus_curate's
+    near-dup drop, sql_recursive_closure's edge list) otherwise re-run
+    the posting self-join each."""
+    return jaccard_pairs(
+        _doc_shingles(spark, sf_dir), "doc_id", "sh", JACCARD_THRESHOLD
+    ).localCheckpoint()
 
 
 @register("dedup_ngram_jaccard", oracle=_SQL_EXACT_JACCARD, tags=("north_star", "dedup"))
@@ -177,8 +157,6 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified = exact_jaccard(cands, signed, "doc_id", "sh")
     return verified.filter(F.col("jaccard") >= JACCARD_THRESHOLD)
 
-
-_label_cache: dict[tuple[str, str], DataFrame] = {}
 
 # Dedup clustering: near-dup pairs → connected components → one canonical
 # doc per cluster. The oracle re-derives components with a recursive CTE
@@ -220,17 +198,21 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     singletons keep their own id. Downstream dedup keeps
     doc_id == component — one canonical doc per cluster, the step that
     turns pair detection into an actual corpus dedup."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    labels = _label_cache.get(key)
-    if labels is None:
-        d = table(spark, sf_dir, "documents")
-        pairs = dedup_ngram_jaccard(spark, sf_dir)
-        labels = connected_components(
-            d.select(F.col("doc_id").alias("node")),
-            pairs.select(F.col("i").alias("src"), F.col("j").alias("dst")),
-        )
-        _label_cache[key] = labels  # dedup_canonical reuses the CC result
-    return labels.select(F.col("node").alias("doc_id"), "component")
+    return _cc_labels(spark, sf_dir).select(
+        F.col("node").alias("doc_id"), "component"
+    )
+
+
+@session_memo
+def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(node, component) of the near-dup graph, memoized so
+    dedup_canonical reuses dedup_cluster's connected-components run."""
+    d = table(spark, sf_dir, "documents")
+    pairs = dedup_ngram_jaccard(spark, sf_dir)
+    return connected_components(
+        d.select(F.col("doc_id").alias("node")),
+        pairs.select(F.col("i").alias("src"), F.col("j").alias("dst")),
+    )
 
 
 # Canonical-corpus step: keep exactly one doc per component (the min
@@ -515,48 +497,22 @@ _SQL_INCREMENTAL = (
 )
 
 
-_banded_cache: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo
 def _banded8x2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh, bk) — the 8×2 MinHash-banded signature frame,
-    memoized per (applicationId, sf_dir) like _doc_shingles: this IS the
+    memoized per (session, sf_dir) like _doc_shingles: this IS the
     persisted posting-table role (dedup_minhash_persist's bucketBy table
     at production), shared by dedup_incremental and
     corpus_ingest_incremental so a session bands the corpus once."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _banded_cache.get(key)
-    if cached is None:
-        cached = (
-            _doc_shingles(spark, sf_dir)
-            .select(
-                "doc_id",
-                "sh",
-                minhash_band_keys(F.col("sh"), bands=8, rows=2).alias("bk"),
-            )
-            .localCheckpoint()
+    return (
+        _doc_shingles(spark, sf_dir)
+        .select(
+            "doc_id",
+            "sh",
+            minhash_band_keys(F.col("sh"), bands=8, rows=2).alias("bk"),
         )
-        _banded_cache[key] = cached
-    return cached
-
-
-def clear_memos(app_id: str | None = None) -> int:
-    """Evict the session-scoped memo frames (shingles, exact pairs, CC
-    labels, banded signatures) for one applicationId — or all of them —
-    and return how many entries were dropped. The memos never evict on
-    their own (r9 ADVICE low #4): localCheckpoint blocks die with the
-    application, which is the right lifetime for the one-application
-    bench/driver runs, but a LONG-LIVED session that switches sf_dirs
-    accumulates one block set per (app, sf). Dropping the last Python
-    reference lets Spark's ContextCleaner reclaim the checkpoint RDD
-    blocks on its next GC-triggered sweep."""
-    n = 0
-    for cache in (_shingle_cache, _pairs_cache, _label_cache, _banded_cache):
-        for key in list(cache):
-            if app_id is None or key[0] == app_id:
-                del cache[key]
-                n += 1
-    return n
+        .localCheckpoint()
+    )
 
 
 @register("dedup_incremental", oracle=_SQL_INCREMENTAL, tags=("north_star", "dedup", "incremental"))

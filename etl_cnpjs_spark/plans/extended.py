@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from etl_cnpjs_spark.catalog import table
 from etl_cnpjs_spark.functions.text import tokens
+from etl_cnpjs_spark.memo import session_memo, session_tmpdir
 from etl_cnpjs_spark.plans.registry import quantize, quantize_sql, register
 
 _QS = (0.25, 0.5, 0.75, 0.95)
@@ -402,23 +403,16 @@ def fn_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_binstage_cache: dict[tuple[str, str], str] = {}
-
-
+@session_memo
 def _stage_bin_files(spark: SparkSession, sf_dir: str) -> str:
     """Stage the 50-doc slice as .bin files EXECUTOR-side: each partition
     writes its own rows straight from the task (foreachPartition), the
     driver never holds the bytes. On local mode the staging dir is local
     tmp; on a cluster the same shape writes to shared storage. Memoized
-    per (applicationId, sf) — staging is input setup, not query work."""
+    per (session, sf) — staging is input setup, not query work."""
     import os
-    import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _binstage_cache.get(key)
-    if cached is not None:
-        return cached
-    out = tempfile.mkdtemp(prefix="binfiles_")
+    out = session_tmpdir("binfiles_")
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
 
     def write_partition(rows):
@@ -427,7 +421,6 @@ def _stage_bin_files(spark: SparkSession, sf_dir: str) -> str:
                 f.write(r.text.encode("utf-8"))
 
     d.select("doc_id", "text").foreachPartition(write_partition)
-    _binstage_cache[key] = out
     return out
 
 

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_cnpjs_spark.catalog import table
+from etl_cnpjs_spark.memo import session_memo
 from etl_cnpjs_spark.operators.similarity import (
     all_pairs_cosine_blocked,
     cosine,
@@ -179,24 +180,17 @@ def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_join_blocked(n.select("vec_id", "v"), "vec_id", "v", KNN_K)
 
 
-_kmeans_cache: dict[tuple[str, str], object] = {}
-
-
+@session_memo
 def _kmeans_model(spark: SparkSession, sf_dir: str, train_df) -> object:
-    """Fitted KMeans quantizer memoized per (applicationId, sf) — at
+    """Fitted KMeans quantizer memoized per (session, sf) — at
     scale the coarse quantizer is trained ONCE offline and reused by
     every query; training inside each query execution was a bench
     artifact (VERDICT r1), not the production shape."""
     from pyspark.ml.clustering import KMeans
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    model = _kmeans_cache.get(key)
-    if model is None:
-        model = KMeans(
-            k=16, seed=42, featuresCol="features", predictionCol="cid"
-        ).fit(train_df)
-        _kmeans_cache[key] = model
-    return model
+    return KMeans(
+        k=16, seed=42, featuresCol="features", predictionCol="cid"
+    ).fit(train_df)
 
 
 @register(

@@ -10,6 +10,8 @@ the reconciliation checks readme.md:140-145 describes manually.
 
 from __future__ import annotations
 
+import csv
+import io
 import os
 
 import duckdb
@@ -157,7 +159,8 @@ def test_typed_layer_casts(spark, cnpj_env):
 
 def test_export_bom_csv(spark, cnpj_env, tmp_path):
     """O18: merged export is ONE file, utf-8-sig, single header, ';' sep,
-    and round-trips the flagship row count."""
+    and round-trips every field of the flagship rows unstripped (the
+    right-padded nome_municipio keeps its padding)."""
     _env, _con = cnpj_env
     df = run_flagship_sql(spark)
     parts = export_csv(df, str(tmp_path / "flagship_csv"))
@@ -169,7 +172,11 @@ def test_export_bom_csv(spark, cnpj_env, tmp_path):
     lines = [ln for ln in text.splitlines() if ln]
     assert lines[0].startswith("cnpj_basico;nome_fantasia;razao_social;")
     assert sum(1 for ln in lines if ln.startswith("cnpj_basico;")) == 1
-    assert len(lines) - 1 == df.count()
+    header, *rows = csv.reader(io.StringIO(text), delimiter=";", escapechar="\\")
+    assert header == df.columns
+    want = sorted(tuple("" if v is None else str(v) for v in r) for r in df.collect())
+    assert sorted(map(tuple, rows)) == want
+    assert any(v != v.strip() for r in want for v in r), "no padded field exercised"
 
 
 def test_export_header_bytes_match_reference_golden(spark, cnpj_env, tmp_path):
@@ -191,6 +198,21 @@ def test_export_header_bytes_match_reference_golden(spark, cnpj_env, tmp_path):
     with open(final, "rb") as f:
         ours_first_line = f.readline().rstrip(b"\r\n")
     assert ours_first_line == golden_first_line
+
+
+def test_load_failure_names_table_and_keeps_siblings(spark, cnpj_env, tmp_path):
+    """A failed table load is reported by name and first shard, after
+    every sibling load has finished and committed."""
+    env, _con = cnpj_env
+    missing = str(tmp_path / "nowhere" / "shard0.csv")
+    routed = {"empresas": [missing], "cnae": env["paths"]["cnae"]}
+    out = tmp_path / "raw"
+    with pytest.raises(RuntimeError) as err:
+        load_raw_parquet(spark, routed, str(out))
+    assert "empresas" in str(err.value) and missing in str(err.value)
+    assert err.value.__cause__ is not None
+    assert (out / "cnae.parquet" / "_SUCCESS").exists()
+    assert not (out / "empresas.parquet").exists()
 
 
 def test_manifest_reader(tmp_path):
